@@ -143,27 +143,41 @@ object Quality {
     // background threads while the fused agg runs on this one (guide
     // §2.6: actions are only sequential because the driver calls them
     // sequentially; each job's stage tail back-fills the other's cores).
-    // Fresh threads inherit the caller's job group/description.
-    val fkFutures: Seq[(ForeignKey, java.util.concurrent.FutureTask[Long])] =
-      fkRules.map { r =>
-        val task = new java.util.concurrent.FutureTask[Long](() =>
-          df.select(col(r.column).as("_fk")).where(col("_fk").isNotNull)
-            .join(r.parent.select(col(r.parentColumn).as("_fk")).distinct(), Seq("_fk"), "left_anti")
-            .count())
-        val t = new Thread(task, s"graft-dq-fk-${r.name}")
-        t.setDaemon(true)
-        t.start()
-        (r, task)
-      }
+    // Fresh threads inherit the caller's job group/description; each FK
+    // thread also TAGS its jobs, so a failing fused aggregate can cancel
+    // exactly the FK jobs it started and join their threads before
+    // surfacing its exception — no job outlives check().
+    val sc = spark.sparkContext
+    val fkTasks = fkRules.map { r =>
+      val tag = s"graft-dq-fk-${java.util.UUID.randomUUID()}"
+      val task = new java.util.concurrent.FutureTask[Long](() => {
+        sc.addJobTag(tag)
+        df.select(col(r.column).as("_fk")).where(col("_fk").isNotNull)
+          .join(r.parent.select(col(r.parentColumn).as("_fk")).distinct(), Seq("_fk"), "left_anti")
+          .count()
+      })
+      val t = new Thread(task, s"graft-dq-fk-${r.name}")
+      t.setDaemon(true)
+      t.start()
+      (r, task, t, tag)
+    }
     val fusedRow: Option[org.apache.spark.sql.Row] =
-      if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).head())
+      try { if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).head()) }
+      catch { case e: Throwable =>
+        // cancellation is asynchronous and an FK thread may submit its
+        // job after a cancel, so cancel again until every thread exits
+        fkTasks.foreach { case (_, _, t, tag) =>
+          while (t.isAlive) { sc.cancelJobsWithTag(tag); t.join(50L) }
+        }
+        throw e
+      }
     def g(n: String): Long = fusedRow
       .flatMap(r => Option(r.getAs[Any](n))).map(_.asInstanceOf[Long]).getOrElse(0L)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     rowRules.foreach { case (n, _, _) => out += ((n, g(s"v:$n"), g(s"c:$n"))) }
     uniqueRules.foreach { r => out += ((r.name, g(s"un:${r.name}") - g(s"ud:${r.name}"), g(s"un:${r.name}"))) }
-    fkFutures.foreach { case (r, task) =>
+    fkTasks.foreach { case (r, task, _, _) =>
       // unwrap ExecutionException so a failing FK count surfaces the SAME
       // exception type the sequential formulation threw
       val orphans =

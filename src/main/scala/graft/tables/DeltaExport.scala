@@ -958,12 +958,6 @@ object DeltaExport {
     target
   }
 
-  /** Latest exported engine snapshot version, if any — the per-commit
-    * exporter's idempotence probe.
-    */
-  def currentExportedSnapshot(fs: FileSystem, exportDir: Path): Option[Long] =
-    replay(fs, exportDir, at = None).map(_.graftSnapshot).filter(_ >= 0)
-
   /** Live (uri, size) file set at `at` (None = head), by log replay only —
     * the reader half used by the gate, which must see the table
     * EXCLUSIVELY through the exported log.
@@ -998,7 +992,7 @@ object DeltaExport {
     val fs = exportDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = replay(fs, exportDir, at).getOrElse(
       throw new IllegalArgumentException(s"no delta log under $exportDir"))
-    liveRows(spark, fs, st, st.files, dvDriverBound)
+    TableScan.read(spark, planOf(spark, fs, st, st.files, dvDriverBound))
   }
 
   /** Bucket-pruned POINT LOOKUP through the exported log — the Delta
@@ -1020,7 +1014,7 @@ object DeltaExport {
     val st = replay(fs, exportDir, at).getOrElse(
       throw new IllegalArgumentException(s"no delta log under $exportDir"))
     val (srcName, kept) = pruneForKey(st, exportDir, key)
-    liveRows(spark, fs, st, kept, dvDriverBound).where(col(srcName) === lit(key))
+    TableScan.read(spark, planOf(spark, fs, st, kept, dvDriverBound)).where(col(srcName) === lit(key))
   }
 
   /** The (kept uris, all live uris) a bucket-pruned point lookup plans —
@@ -1048,145 +1042,88 @@ object DeltaExport {
     val schema = DataType.fromJson(st.schemaString).asInstanceOf[StructType]
     val field = schema.fields.find(_.name == src).getOrElse(
       sys.error(s"bucket source column '$src' not in the published schema"))
-    val b = IcebergExport.bucketOfKey(field.dataType, key, n).toString
+    val b = IcebergExport.bucketOfKey(field.dataType, key, n)
     val pname = st.partitionColumns.head
     (src, st.files.filter { case (_, a) =>
-      a.partitionValues.get(pname) match {
-        case None          => true  // no claim: must scan
-        case Some(None)    => false // null-key partition: key = <v> can't match
-        case Some(Some(v)) => v == b
-      }
+      TableScan.inBuckets(a.partitionValues.get(pname).map(_.map(_.toInt)), _ == b)
     })
   }
 
-  /** Build the live-row frame for a (possibly pruned) subset of the
-    * replayed adds: one scan, partition tuples from the log, DVs of the
-    * SUBSET applied under the driver/broadcast bound.
+  /** The scan plan of a (possibly pruned) subset of the replayed adds:
+    * the log's schema, each add's mandatory `size` (so the scan skips
+    * Spark's listing, as an external Delta reader resolves it from the
+    * log alone) and partition tuple — data files do NOT hold the
+    * partition columns, the log does — plus the SUBSET's deletion
+    * vectors as unsequenced position deletes.
     */
-  private def liveRows(spark: SparkSession, fs: FileSystem, st: LogState,
-      files: Map[String, AddInfo], dvDriverBound: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
-    val schema = DataType.fromJson(st.schemaString).asInstanceOf[StructType]
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private def planOf(spark: SparkSession, fs: FileSystem, st: LogState,
+      files: Map[String, AddInfo], dvDriverBound: Long): TableScan.ScanPlan =
+    TableScan.ScanPlan(
+      DataType.fromJson(st.schemaString).asInstanceOf[StructType],
+      files.toSeq.sortBy(_._1).map { case (u, a) =>
+        TableScan.ScanFile(u, a.size, partition = a.partitionValues)
+      },
+      dvPositions(spark, fs, files.toSeq.collect { case (u, a) if a.dv.isDefined => (u, a.dv.get) },
+        dvDriverBound).toSeq,
+      st.partitionColumns)
 
-    // deletion vectors: decoded driver-side (bounded by the deleted-row
-    // count — change-set-sized by construction) and applied as ONE
-    // broadcast anti join on (file, row_index), the same plan shape as
-    // the Iceberg leg's position deletes
-    val dvFiles = files.toSeq.collect { case (u, a) if a.dv.isDefined => (u, a.dv.get) }
-    val needDv = dvFiles.nonEmpty
-    def withMeta(df: DataFrame): DataFrame =
-      if (!needDv) df
-      else df.withColumn("_gpath", canonicalPathCol(col("_metadata.file_path")))
-        .withColumn("_gpos", col("_metadata.row_index"))
-
-    // The log's add actions carry each file's mandatory `size`, so the
-    // scan skips Spark's listing round (no getFileStatus per file, no
-    // listing job past 32 paths) — an external Delta reader resolves the
-    // same scan from the log alone.
-    def manifestScan(readSchema: StructType): DataFrame =
-      // `size` is mandatory in the protocol and a parquet file is never
-      // 0 bytes; a log that violates that falls back to the listing
-      // reader rather than risking a length-truncated scan.
-      if (files.valuesIterator.forall(_.size > 0))
-        org.apache.spark.sql.GraftManifestRead.read(spark, "parquet", readSchema,
-          files.toSeq.sortBy(_._1).map { case (p, a) => (new Path(p), a.size) })
-      else spark.read.schema(readSchema).parquet(files.keys.toSeq.sorted: _*)
-    val base: DataFrame =
-      if (st.partitionColumns.isEmpty)
-        withMeta(manifestScan(schema))
-      else {
-        // data files do NOT hold the partition columns: ONE scan of every
-        // live file with the data schema, then the tuple attached via a
-        // broadcast join on the normalized file path (the per-TUPLE
-        // union-of-scans this replaces planned one scan node per bucket —
-        // fine at 33 buckets, pathological at a 100 TB table's 1024). The
-        // broadcast is the log's own (path → tuple) map, O(files) rows of
-        // (string, int) — metadata-sized, the same order as the file
-        // listing Spark already broadcasts to schedule the scan.
-        val pset = st.partitionColumns.toSet
-        val dataSchema = StructType(schema.fields.filterNot(f => pset.contains(f.name)))
-        val tupleSchema = StructType(
-          org.apache.spark.sql.types.StructField("_tpath",
-            org.apache.spark.sql.types.StringType) +:
-            st.partitionColumns.map(pc => org.apache.spark.sql.types.StructField(
-              s"${pc}__str", org.apache.spark.sql.types.StringType)))
-        val tupleRows: java.util.List[org.apache.spark.sql.Row] =
-          files.toSeq.sortBy(_._1).map { case (u, a) =>
-            org.apache.spark.sql.Row.fromSeq(
-              canonicalPath(u) +:
-                st.partitionColumns.map(pc => a.partitionValues.get(pc).flatten.orNull))
-          }.asJava
-        val tupleDf = spark.createDataFrame(tupleRows, tupleSchema)
-        var df = withMeta(manifestScan(dataSchema))
-          .withColumn("_tpath", canonicalPathCol(col("_metadata.file_path")))
-          .join(broadcast(tupleDf), Seq("_tpath"))
-        st.partitionColumns.foreach { pc =>
-          val f = schema.fields.find(_.name == pc).getOrElse(
-            throw new IllegalStateException(s"partition column '$pc' missing from schemaString"))
-          df = df.withColumn(pc, col(s"${pc}__str").cast(f.dataType)).drop(s"${pc}__str")
+  /** Deletion vectors as `(_ppath, _ppos)` rows. The driver decodes DVs
+    * only while the summed cardinality — read from the DESCRIPTORS, so no
+    * decode is needed to decide — is change-set-sized, and the rows then
+    * broadcast; past the bound the decode moves to executors and the anti
+    * join degrades LOUDLY to a shuffle, so a deferred-OPTIMIZE backlog can
+    * neither OOM the driver nor blow a broadcast (the read-side mirror of
+    * writeDvsDistributed's export-side bound).
+    */
+  private def dvPositions(spark: SparkSession, fs: FileSystem,
+      dvFiles: Seq[(String, DvDescriptor)], dvDriverBound: Long): Option[TableScan.PositionDeletes] =
+    if (dvFiles.isEmpty) None
+    else {
+      import spark.implicits._
+      val totalDeleted = dvFiles.map(_._2.cardinality).sum
+      if (totalDeleted <= dvDriverBound) {
+        val deleted: Seq[(String, Long)] = dvFiles.flatMap { case (u, d) =>
+          val p = canonicalPath(u)
+          readDv(fs, d).map(pos => (p, pos))
         }
-        df.drop("_tpath")
-      }
-    val live =
-      if (!needDv) base
-      else {
-        // The driver decodes DVs only while the summed cardinality — read
-        // from the DESCRIPTORS, so no decode is needed to decide — is
-        // change-set-sized; past the bound the decode moves to executors
-        // and the anti join degrades LOUDLY to a shuffle, so a
-        // deferred-OPTIMIZE backlog can neither OOM the driver nor blow a
-        // broadcast (the read-side mirror of writeDvsDistributed's
-        // export-side bound).
-        import spark.implicits._
-        val totalDeleted = dvFiles.map(_._2.cardinality).sum
-        if (totalDeleted <= dvDriverBound) {
-          val deleted: Seq[(String, Long)] = dvFiles.flatMap { case (u, d) =>
-            val p = canonicalPath(u)
-            readDv(fs, d).map(pos => (p, pos))
-          }
-          base.join(broadcast(deleted.toDF("_dpath", "_dpos")),
-            base("_gpath") === col("_dpath") && base("_gpos") === col("_dpos"), "left_anti")
-        } else {
-          System.err.println(s"DELTA READ: $totalDeleted outstanding deleted positions " +
-            "exceed the driver/broadcast bound — decoding DVs on executors and " +
-            "degrading to a shuffle anti join (still exact; compact the source " +
-            "to clear the backlog)")
-          val confBytes = {
-            val baos = new java.io.ByteArrayOutputStream()
-            spark.sparkContext.hadoopConfiguration.write(new java.io.DataOutputStream(baos))
-            baos.toByteArray
-          }
-          val descRows = dvFiles.map { case (u, d) =>
-            (canonicalPath(u), d.storageType, d.pathOrInlineDv, d.offset,
-              d.sizeInBytes)
-          }
-          val decoded = spark.createDataset(descRows)
-            .repartition(math.max(1, math.min(descRows.size,
-              spark.sparkContext.defaultParallelism)))
-            .mapPartitions { it =>
-              if (it.isEmpty) Iterator.empty
-              else {
-                val c = new org.apache.hadoop.conf.Configuration(false)
-                c.readFields(new java.io.DataInputStream(
-                  new java.io.ByteArrayInputStream(confBytes)))
-                var cachedFs: FileSystem = null
-                it.flatMap { case (p, st, dvp, off, size) =>
-                  val dvPath = new Path(dvp)
-                  if (cachedFs == null) cachedFs = dvPath.getFileSystem(c)
-                  readDv(cachedFs, DvDescriptor(st, dvp, off, size, 0L)).iterator
-                    .map(pos => (p, pos))
-                }
+        Some(TableScan.PositionDeletes(
+          org.apache.spark.sql.functions.broadcast(deleted.toDF("_ppath", "_ppos")), sequenced = false))
+      } else {
+        System.err.println(s"DELTA READ: $totalDeleted outstanding deleted positions " +
+          "exceed the driver/broadcast bound — decoding DVs on executors and " +
+          "degrading to a shuffle anti join (still exact; compact the source " +
+          "to clear the backlog)")
+        val confBytes = {
+          val baos = new java.io.ByteArrayOutputStream()
+          spark.sparkContext.hadoopConfiguration.write(new java.io.DataOutputStream(baos))
+          baos.toByteArray
+        }
+        val descRows = dvFiles.map { case (u, d) =>
+          (canonicalPath(u), d.storageType, d.pathOrInlineDv, d.offset,
+            d.sizeInBytes)
+        }
+        val decoded = spark.createDataset(descRows)
+          .repartition(math.max(1, math.min(descRows.size,
+            spark.sparkContext.defaultParallelism)))
+          .mapPartitions { it =>
+            if (it.isEmpty) Iterator.empty
+            else {
+              val c = new org.apache.hadoop.conf.Configuration(false)
+              c.readFields(new java.io.DataInputStream(
+                new java.io.ByteArrayInputStream(confBytes)))
+              var cachedFs: FileSystem = null
+              it.flatMap { case (p, st, dvp, off, size) =>
+                val dvPath = new Path(dvp)
+                if (cachedFs == null) cachedFs = dvPath.getFileSystem(c)
+                readDv(cachedFs, DvDescriptor(st, dvp, off, size, 0L)).iterator
+                  .map(pos => (p, pos))
               }
             }
-            .toDF("_dpath", "_dpos")
-          base.join(decoded,
-            base("_gpath") === col("_dpath") && base("_gpos") === col("_dpos"), "left_anti")
-        }
+          }
+          .toDF("_ppath", "_ppos")
+        Some(TableScan.PositionDeletes(decoded, sequenced = false))
       }
-    live.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+    }
 
   /** Delta version history (ascending) — for time-travel tests. */
   def logVersions(fs: FileSystem, exportDir: Path): Seq[Long] = listLog(fs, exportDir)._1

@@ -3,9 +3,9 @@ package graft.tables
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
@@ -187,12 +187,11 @@ class SnapshotTable(val spark: SparkSession, val location: String,
   def read(buckets: Option[Set[Int]] = None): DataFrame = {
     val snap = currentSnapshot
     buckets match {
-      case None => readSnapshotDf(snap, None)
+      case None => readFiles(snap, snap.files)
       case Some(bs) =>
-        val real = readSnapshotDf(snap, Some(bs))
-        val adopted = snap.files.filter(_.bucket < 0)
-        if (adopted.isEmpty) real
-        else real.unionByName(
+        val (real, adopted) = bucketFiles(snap, bs)
+        if (adopted.isEmpty) readFiles(snap, real)
+        else readFiles(snap, real).unionByName(
           readFiles(snap, adopted).where(
             bucketExpr(keyColForBucketing(snap), snap.numBuckets,
               SnapshotTable.bucketFnOf(snap.properties))
@@ -213,13 +212,10 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     */
   def readRange(column: String, lo: Double, hi: Double): DataFrame = {
     val snap = currentSnapshot
-    val field = snap.schema.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
-      throw new IllegalArgumentException(s"readRange column '$column' not in table schema"))
-    require(field.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"readRange needs a numeric column, '$column' is ${field.dataType}")
-    val kept = snap.files.filter(_.stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi })
-    val pruned = snap.copy(files = kept)
-    readSnapshotDf(pruned, None).where(SnapshotTable.rangePredicate(field, lo, hi))
+    TableScan.readRange(spark, snap.schema, column, lo, hi) { (field, overlaps) =>
+      planOf(snap, snap.files.filter(
+        _.stats.get(field.name).forall { case (mn, mx) => overlaps(Some(mn), Some(mx)) }))
+    }
   }
 
   /** Time travel: read the table as of an earlier (unexpired) snapshot
@@ -228,7 +224,8 @@ class SnapshotTable(val spark: SparkSession, val location: String,
   def readAt(version: Long): DataFrame = {
     val p = new Path(snapshotsDir, snapshotFileName(version))
     require(fs.exists(p), s"snapshot v$version expired or never existed (have: ${snapshotVersions.mkString(",")})")
-    readSnapshotDf(readSnapshot(p), None)
+    val snap = readSnapshot(p)
+    readFiles(snap, snap.files)
   }
 
   /** Change data feed between two snapshot versions — Iceberg
@@ -299,10 +296,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     // (an adoption/absorption changes every row they hold, and rows that
     // are byte-identical on both sides fall out of the join as no-change).
     def sideDf(snap: Snapshot): DataFrame = {
-      val real = readSnapshotDf(snap, Some(changedBuckets))
-      val adoptedFs = snap.files.filter(_.bucket < 0)
-      if (!changedBuckets.exists(_ < 0) || adoptedFs.isEmpty) real
-      else real.unionByName(readFiles(snap, adoptedFs))
+      val (real, adopted) = bucketFiles(snap, changedBuckets)
+      if (!changedBuckets.exists(_ < 0) || adopted.isEmpty) readFiles(snap, real)
+      else readFiles(snap, real).unionByName(readFiles(snap, adopted))
     }
     // NULL-safe key join + explicit presence markers: the table treats
     // NULL as a valid merge key (merge groups it, the delete-applying
@@ -325,105 +321,45 @@ class SnapshotTable(val spark: SparkSession, val location: String,
       .where(col("_change_type").isNotNull)
   }
 
-  /** File-level pruned view: `Some(bs)` keeps only REAL (bucketed) files
-    * of those buckets — adopted (bucket < 0) files are excluded, because a
-    * file-granularity include would leak rows of other buckets; callers
-    * needing them add [[readFiles]] of the adopted set with their own
-    * row-level handling (see [[read]], [[merge]], [[changesBetween]]).
+  /** The files a read of buckets `bs` plans ([[TableScan.inBuckets]]),
+    * split into the REAL files of those buckets and the adopted
+    * (bucket < 0, unclaimed) files, which hold rows of ANY bucket — a
+    * file-granularity include would leak rows of other buckets, so
+    * callers add them with their own row-level handling (see [[read]],
+    * [[changesBetween]]).
     */
-  private def readSnapshotDf(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame = {
-    val files = buckets match {
-      case Some(bs) => snap.files.filter(f => f.bucket >= 0 && bs.contains(f.bucket))
-      case None     => snap.files
-    }
-    readFiles(snap, files)
-  }
+  private def bucketFiles(snap: Snapshot, bs: Set[Int]): (Seq[DataFile], Seq[DataFile]) =
+    snap.files.filter(f => TableScan.inBuckets(claimOf(f), bs)).partition(_.bucket >= 0)
 
-  /** Read an explicit file subset with the snapshot's schema-on-read,
-    * APPLYING the snapshot's equality deletes ([[DeleteFile]]): a data
-    * row dies when a delete file of its bucket carries its merge key at a
-    * HIGHER sequence than the row's data file. Data files are grouped by
-    * sequence so each group reads in one scan with its sequence as a
-    * literal (a handful of groups — sequences proliferate only on
-    * merge-on-read buckets until compaction absorbs them); the deletes
-    * join is a left-anti on the key with the sequence inequality as a
-    * residual condition. Snapshots without deletes (every copy-on-write
-    * table) skip all of this and read exactly as before.
-    */
-  private def readFiles(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    val minSeq = files.map(_.seq).min
-    val bucketsPresent = files.map(_.bucket).toSet
-    // An adopted (bucket −1) file can hold rows of ANY bucket, so every
-    // delete is in scope for it; otherwise only deletes of the buckets
-    // actually being read can match (keys hash to exactly one bucket).
-    val relevant =
-      if (bucketsPresent.exists(_ < 0)) snap.deletes.filter(_.seq > minSeq)
-      else snap.deletes.filter(d => d.seq > minSeq && bucketsPresent.contains(d.bucket))
-    if (relevant.isEmpty) readFilesRaw(snap, files)
-    else {
-      val key = keyColForBucketing(snap)
-      val keyField = snap.schema.fields.find(_.name.equalsIgnoreCase(key)).getOrElse(
-        throw new IllegalStateException(s"merge key column '$key' missing from table schema"))
-      val data = files.groupBy(_.seq).toSeq.map { case (s, fsOfSeq) =>
-        readFilesRaw(snap, fsOfSeq).withColumn("_gseq", lit(s))
-      }.reduce(_ unionByName _)
-      val delSchema = StructType(Seq(StructField(keyField.name, keyField.dataType, nullable = true)))
-      val dels = relevant.groupBy(_.seq).toSeq.map { case (s, ds) =>
-        // delete files are always parquet with manifest-recorded lengths
-        // — same listing-free scan as the data side
-        // strictly > 0: a parquet file is never 0 bytes, and a corrupt
-        // manifest entry with bytes=0 would make the manifest-fed scan
-        // plan an EMPTY split over a real file (silently unapplied
-        // deletes) — the listing reader is the safe fallback
-        (if (ds.forall(_.bytes > 0))
-           org.apache.spark.sql.GraftManifestRead.read(spark, "parquet", delSchema,
-             ds.map(d => (fs.makeQualified(new Path(dataDir, d.path)), d.bytes)))
-         else spark.read.schema(delSchema)
-           .parquet(ds.map(d => new Path(dataDir, d.path).toString): _*))
-          .select(col(keyField.name).as("_dkey"))
-          .withColumn("_dseq", lit(s))
-      }.reduce(_ unionByName _)
-      // NULL-safe key equality matches the merge's groupBy(key) semantics
-      // (NULL is a key); rows of files at/after the delete's sequence
-      // already reflect the change and must survive.
-      data.join(dels, col(key) <=> col("_dkey") && col("_dseq") > col("_gseq"), "left_anti")
-        .drop("_gseq")
-    }
-  }
+  private def claimOf(f: DataFile): Option[Option[Int]] =
+    if (f.bucket < 0) None else Some(Some(f.bucket))
 
-  /** Read an explicit file subset with the snapshot's schema-on-read
-    * (no delete application — [[readFiles]] layers that on top).
+  /** The scan plan of an explicit file subset: the snapshot's
+    * schema-on-read, its format, and its equality deletes
+    * ([[DeleteFile]]) — a data row dies when a delete file of its bucket
+    * carries its merge key at a HIGHER sequence than the row's data file.
+    * Snapshots without deletes (every copy-on-write table) plan one scan.
     */
-  private def readFilesRaw(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else {
-      val format = SnapshotTable.resolveFormat(snap.properties)
-      // The manifest already knows every file's true length (recorded
-      // from the write listing), so parquet/orc scans skip Spark's
-      // listing round — no getFileStatus per file, no listing JOB past
-      // 32 paths (guide §6: manifest formats exist so readers never
-      // list). Schema-on-read semantics are unchanged (same relation +
-      // FileFormat); avro or a legacy entry without a length falls back.
-      // strictly > 0 (not >= 0): a 0-length recorded size would plan an
-      // empty scan of a real file and silently drop its rows; parquet/orc
-      // files are never 0 bytes, so 0 means "size unknown/corrupt" → list
-      if ((format == "parquet" || format == "orc") && files.forall(_.bytes > 0))
-        org.apache.spark.sql.GraftManifestRead.read(spark, format, snap.schema,
-          files.map(f => (fs.makeQualified(new Path(dataDir, f.path)), f.bytes)))
+  private def planOf(snap: Snapshot, files: Seq[DataFile]): TableScan.ScanPlan = {
+    val format = SnapshotTable.resolveFormat(snap.properties)
+    def qualified(rel: String) = fs.makeQualified(new Path(dataDir, rel)).toString
+    val deletes =
+      if (snap.deletes.isEmpty) Nil
       else {
-        val paths = files.map(f => new Path(dataDir, f.path).toString)
-        // schema-on-read: files written before an ADD COLUMNS fill NULL
-        val reader = spark.read.schema(snap.schema)
-        format match {
-          case "orc"  => reader.orc(paths: _*)
-          case "avro" => reader.format(SnapshotTable.AvroFormatClass).load(paths: _*)
-          case _      => reader.parquet(paths: _*)
-        }
+        val key = keyColForBucketing(snap)
+        val keyField = snap.schema.fields.find(_.name.equalsIgnoreCase(key)).getOrElse(
+          throw new IllegalStateException(s"merge key column '$key' missing from table schema"))
+        Seq(TableScan.KeyDeletes(keyField, snap.deletes.map(d =>
+          TableScan.ScanDelete(qualified(d.path), d.bytes, d.seq, Some(Some(d.bucket)))),
+          foreign = false))
       }
-    }
+    TableScan.ScanPlan(snap.schema, files.map(f =>
+      TableScan.ScanFile(qualified(f.path), f.bytes, f.seq, claimOf(f), format = format)),
+      deletes)
   }
+
+  private def readFiles(snap: Snapshot, files: Seq[DataFile]): DataFrame =
+    TableScan.read(spark, planOf(snap, files))
 
   // ----------------------------------------------------------------- writes
 
@@ -1572,7 +1508,7 @@ class SnapshotTable(val spark: SparkSession, val location: String,
             s"DELTA EXPORT: $totalDelRows outstanding delete rows exceed the broadcast " +
               "bound — position-izing via a shuffle join (compact to clear the backlog)")
           def hintDel(df: DataFrame): DataFrame = if (delSmall) broadcast(df) else df
-          // candidate files under the snapshot schema (readFilesRaw's
+          // candidate files under the snapshot schema (the read core's
           // schema-on-read stance), plus the parquet metadata columns
           val hit = spark.read.schema(snap.schema).parquet(cand.map(f => qualify(f.path)): _*)
             .select(col(keyField.name).as("_k"),
@@ -1828,10 +1764,12 @@ object SnapshotTable {
 
   /** Run two independent Spark actions concurrently and return both
     * results; either failure propagates after both complete (no abandoned
-    * in-flight job). `a` runs on a FRESH thread so it inherits the
-    * caller's InheritableThreadLocal Spark properties (job group/
-    * description — a shared pool would freeze its first caller's); `b`
-    * runs on the calling thread.
+    * in-flight job). When both fail, `b`'s failure rides on `a`'s as a
+    * suppressed exception, and an interrupt caught on either side
+    * re-sets this thread's interrupt flag before the rethrow. `a` runs on
+    * a FRESH thread so it inherits the caller's InheritableThreadLocal
+    * Spark properties (job group/description — a shared pool would
+    * freeze its first caller's); `b` runs on the calling thread.
     */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     val ra = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
@@ -1842,11 +1780,15 @@ object SnapshotTable {
     t.start()
     val rb = try Right(b) catch { case e: Throwable => Left(e) }
     t.join()
-    (ra.get(), rb) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(e), _)         => throw e
-      case (_, Left(e))         => throw e
+    val failure = (ra.get(), rb) match {
+      case (Right(x), Right(y)) => return (x, y)
+      case (Left(ea), Left(eb)) => if (ea ne eb) ea.addSuppressed(eb); ea
+      case (Left(e), _)         => e
+      case (_, Left(e))         => e
     }
+    if ((failure +: failure.getSuppressed.toSeq).exists(_.isInstanceOf[InterruptedException]))
+      Thread.currentThread().interrupt()
+    throw failure
   }
 
   private[tables] def parallelFooterIo[A, B](xs: Seq[A])(f: A => B): Seq[B] =
@@ -1914,46 +1856,6 @@ object SnapshotTable {
         s"unknown bucket function '$other' (manifest from a newer engine version?)")
   }
 
-  /** `lo <= field <= hi` as a TYPED-LITERAL predicate so the comparison
-    * stays on the BARE column: a cast-wrapped column cannot be translated
-    * to a parquet data-source filter, which would forfeit row-group
-    * pruning inside the kept files. Integral columns round the bounds
-    * INWARD (x >= 4.5 ⇔ x >= 5), which is exact, and CLAMP them to the
-    * column type's own range before the literal is built: a caller
-    * passing lo/hi outside e.g. Int range (a sentinel like 1e10 for "no
-    * upper cap") must not overflow the cast — under ANSI that throws
-    * CAST_OVERFLOW, with ANSI off the literal wraps and silently drops
-    * matching rows. A bound past the type's max/min is semantically
-    * "unbounded on that side", which the clamp expresses exactly; a
-    * clamped-empty range matches nothing. Fractional/decimal columns
-    * fall back to the double cast (correct, pushdown lost — acceptable:
-    * double columns take the fast path, decimals are rare stats columns).
-    * Shared by [[SnapshotTable.readRange]] and
-    * [[IcebergExport.readTableRange]] so both skip-index consumers apply
-    * identical residual semantics.
-    */
-  private[tables] def rangePredicate(
-      field: org.apache.spark.sql.types.StructField, lo: Double, hi: Double): Column = {
-    import org.apache.spark.sql.types._
-    val column = field.name
-    def integralPredicate(typeMin: Long, typeMax: Long) = {
-      val lo2 = math.max(if (lo <= typeMin.toDouble) typeMin else math.ceil(lo).toLong, typeMin)
-      val hi2 = math.min(if (hi >= typeMax.toDouble) typeMax else math.floor(hi).toLong, typeMax)
-      if (lo2 > hi2) lit(false)
-      else col(column) >= lit(lo2).cast(field.dataType) && col(column) <= lit(hi2).cast(field.dataType)
-    }
-    field.dataType match {
-      case ByteType    => integralPredicate(Byte.MinValue, Byte.MaxValue)
-      case ShortType   => integralPredicate(Short.MinValue, Short.MaxValue)
-      case IntegerType => integralPredicate(Int.MinValue, Int.MaxValue)
-      case LongType    => integralPredicate(Long.MinValue, Long.MaxValue)
-      case DoubleType =>
-        col(column) >= lit(lo) && col(column) <= lit(hi)
-      case _ =>
-        col(column).cast("double") >= lo && col(column).cast("double") <= hi
-    }
-  }
-
   val PropMergeKeyCol = "merge.key.column"
   val PropWatermark = "arcane.watermark" // SURVEY.md §2.A15 external watermark mirror
   val PropSortOrder = "write.sort.order"          // comma-separated columns (sortedBy)
@@ -1978,13 +1880,14 @@ object SnapshotTable {
   // Internal helper column names used by the bucketed write (`gbk`), the
   // merge's union+argmax (`_del`/`_pri`), merge-on-read's decision join
   // (`_k`/`_v`/`_d`/`_row`/`_tk`/`_tv`/`_texists`/`_kill`/`_upsert`) and
-  // the delete-applying read (`_gseq`/`_dkey`/`_dseq`). A same-named USER
+  // the delete-applying read ([[TableScan]]: `_gseq`/`_gfile`/`_fkey`/
+  // `_dkey`/`_dseq`). A same-named USER
   // column would be silently overwritten and lost in every merged row —
   // reject loudly up front instead (reserved-name collisions are schema
   // bugs).
   private val ReservedColumns = Set("gbk", "_del", "_pri",
     "_k", "_v", "_d", "_row", "_tk", "_tv", "_texists", "_kill", "_upsert",
-    "_gseq", "_dkey", "_dseq", "_fp", "_tp")
+    "_gseq", "_gfile", "_fkey", "_dkey", "_dseq", "_fp", "_tp")
 
   private[tables] def rejectReservedColumns(schema: org.apache.spark.sql.types.StructType): Unit = {
     val clash = schema.fieldNames.filter(n => ReservedColumns.contains(n.toLowerCase))

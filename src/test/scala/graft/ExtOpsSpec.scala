@@ -1679,6 +1679,30 @@ class ExtOpsSpec extends SparkSpec {
     assert(rep("foreign_key(k->pk)") == ((1L, 3L)))       // k=7 orphan; NULL key skipped
   }
 
+  test("Quality.check: a failing fused aggregate surfaces its cause and leaves no FK job running") {
+    import graft.ext.Quality._
+    val child = (1L to 20L).toDF("k")
+    // a parent whose anti-join runs ~15 s uncancelled (two tasks of 60
+    // rows x 250 ms, leaving cores free for the fused aggregate, which
+    // fails on its first row)
+    val slow = udf { (x: Long) => Thread.sleep(250); x >= 0 }
+    val parent = spark.range(0, 120, 1, 2).toDF("pk").where(slow(col("pk")))
+    val e = intercept[Exception] {
+      check(child, Seq(
+        Predicate("raises", raise_error(lit("dq-predicate-boom")).cast("boolean")),
+        ForeignKey("k", parent, "pk")))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => String.valueOf(c.getMessage).contains("dq-predicate-boom")),
+      s"the predicate's own failure must surface, got: $e")
+    // job end events reach the status store through the async listener bus
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"FK jobs outlived check(): ${tracker.getActiveJobIds.mkString(",")}")
+  }
+
   test("Quality.check: two InSet rules on one column stay distinct; identical rules rejected") {
     import graft.ext.Quality._
     val df = Seq("A", "B", "C").toDF("flag")

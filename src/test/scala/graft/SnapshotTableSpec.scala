@@ -19,6 +19,24 @@ class SnapshotTableSpec extends SparkSpec {
     t
   }
 
+  test("inParallel: when both sides fail, both failures surface and an interrupt stays set") {
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.inParallel[Int, Int](
+        throw new IllegalStateException("side-a write failed"),
+        throw new IllegalArgumentException("side-b write failed"))
+    }
+    assert(e.getMessage == "side-a write failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("side-b write failed"))
+    assert(!Thread.currentThread().isInterrupted)
+
+    val ie = intercept[InterruptedException] {
+      SnapshotTable.inParallel[Int, Int](1, throw new InterruptedException("side-b interrupted"))
+    }
+    assert(ie.getMessage == "side-b interrupted")
+    // Thread.interrupted() reads AND clears the flag, so later tests run clean
+    assert(Thread.interrupted(), "the caught interrupt must be re-set on the calling thread")
+  }
+
   test("a ZERO-ROW staged batch is a harmless commit in both merge modes") {
     // the real path to this edge: content dedup can suppress EVERY row of
     // a non-empty micro-batch, so the pipeline hands merge/mergeOnRead an

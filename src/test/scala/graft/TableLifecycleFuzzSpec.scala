@@ -86,9 +86,12 @@ class TableLifecycleFuzzSpec extends SparkSpec {
     // that is the STAGING layer's job), so key-unique the opening batch
     val first = randomBatch().filterNot(_._4)
       .groupBy(_._1).map(_._2.maxBy(_._2)).toSeq
+    // versionnumber stats feed the manifest skipping index, so the final
+    // range probes below exercise file pruning, not just the residual
     t.createOrReplace(
       first.toDF("arcane_merge_key", "versionnumber", "payload", "IsDelete"),
-      "arcane_merge_key", numBuckets = 4)
+      "arcane_merge_key", numBuckets = 4,
+      extraProps = Map(SnapshotTable.PropStatsColumns -> "versionnumber"))
     applyModel(first)
     checkInvariants("bootstrap")
 
@@ -172,20 +175,40 @@ class TableLifecycleFuzzSpec extends SparkSpec {
       "arcane_merge_key", "versionnumber", "IsDelete")
     applyModel(b2)
     checkInvariants("final:merge-mor")
-    val mainDelta = s"${t.location}-delta-final"
-    t.exportDelta(mainDelta)
+    // The same final state — outstanding deletes over an adopt → merge →
+    // compact history — read back through all three readers: full scans,
+    // pruned point lookups and manifest-pruned range scans must each
+    // agree with the one model.
+    val mainDelta = new org.apache.hadoop.fs.Path(s"${t.location}-delta-final")
+    val mainIceberg = s"${t.location}-iceberg-final"
+    t.exportDelta(mainDelta.toString)
+    t.exportIceberg(mainIceberg)
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[String, (Long, String)] = {
+      val rows = df.select($"arcane_merge_key", $"versionnumber", $"payload")
+        .as[(String, Long, String)].collect()
+      assert(rows.map(_._1).distinct.length == rows.length, s"seed $seed: duplicate keys in a read")
+      rows.map(r => r._1 -> (r._2, r._3)).toMap
+    }
+    assert(rowsOf(graft.tables.IcebergExport.readTable(spark, mainIceberg)) == model,
+      s"seed $seed: Iceberg readTable diverged from the model")
+    assert(rowsOf(graft.tables.DeltaExport.readTable(spark, mainDelta)) == model,
+      s"seed $seed: Delta readTable diverged from the model")
     val probe = rng.shuffle(keys).take(6) :+ "nosuchkey"
     probe.foreach { k =>
-      val got = graft.tables.DeltaExport.readTableForKey(spark,
-          new org.apache.hadoop.fs.Path(mainDelta), k)
-        .select($"versionnumber", $"payload").as[(Long, String)].collect().toSeq
-      model.get(k) match {
-        case Some((v, p)) =>
-          assert(got == Seq((v, p)), s"seed $seed pruned lookup $k: $got != ${(v, p)}")
-        case None =>
-          assert(got.isEmpty, s"seed $seed pruned lookup $k: expected empty, got $got")
-      }
+      val expected = model.get(k).map(k -> _).toMap
+      assert(rowsOf(graft.tables.DeltaExport.readTableForKey(spark, mainDelta, k)) == expected,
+        s"seed $seed Delta pruned lookup $k")
+      assert(rowsOf(graft.tables.IcebergExport.readTableForKey(spark, mainIceberg, k)) == expected,
+        s"seed $seed Iceberg pruned lookup $k")
     }
+    val versions = model.values.map(_._1).toSeq.sorted
+    val (lo, hi) = (versions(versions.size / 3).toDouble, versions(2 * versions.size / 3).toDouble)
+    val inRange = model.filter { case (_, (v, _)) => v >= lo && v <= hi }
+    assert(rowsOf(t.readRange("versionnumber", lo, hi)) == inRange,
+      s"seed $seed: readRange [$lo, $hi] diverged from the model")
+    assert(rowsOf(graft.tables.IcebergExport.readTableRange(spark, mainIceberg,
+      "versionnumber", lo, hi)) == inRange,
+      s"seed $seed: Iceberg readTableRange [$lo, $hi] diverged from the model")
   }
 
   private def pythonWithDuckdb: Boolean =
